@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.functions.{MetadataFunctions, VectorExpressions}
-import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, TrainingData}
+import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, QueryTopK, TrainingData}
 import java.sql.Timestamp
 import java.nio.file.{Files, Paths}
 
@@ -1303,9 +1303,8 @@ final class VectorEngine private (val spark: SparkSession,
     // the same base the flat scan would read, so an ivf+sq8 library runs
     // the full funnel: cell prune -> codes scan -> O(R) rescore.
     def exactScan(base: DataFrame): DataFrame =
-      base.crossJoin(broadcast(spark.range(1).select(qvec.as("qvec"))))
-        .withColumn("distance",
-          round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
+      base.withColumn("distance",
+          round(distance(lib.distance_metric)(col("embedding"), qvec), 6)
             + lit(0.0d))
         .select(col("id"), col("distance"))
         .orderBy(col("distance"), col("id"))
@@ -1444,9 +1443,16 @@ final class VectorEngine private (val spark: SparkSession,
     * vectorized): all query buckets probe in one broadcast equi-join; a
     * per-query candidate count (ONE tiny action, Q rows) decides which
     * queries have >= k bucket candidates; the rest fall back to the full
-    * (allow-set-)scan — never fewer results than flat search. The top-k
-    * reduction is the salted two-phase window (operators.TopK), so no
-    * query's candidate set ever funnels through a single reduce slot. */
+    * (allow-set-)scan — never fewer results than flat search.
+    *
+    * The top-k is [[QueryTopK]]: the full-scan queries (flat libraries,
+    * ivf without a model, the fallback queries) score each chunk once
+    * against all of them in the scan step, probe candidates and rescored
+    * survivors keep per-partition heaps, and ONE exchange keyed by query
+    * merges them into output ordered by (query_id, distance, chunk_id) —
+    * no pair cross join on the exact path, no window, no global sort.
+    * Compact storage (sq8/bq/pq) runs the same reduction for its phase-1
+    * top-R before the exact rescore. */
   def searchBatch(libraryId: String, queries: Seq[(Long, Seq[Float])], k: Int,
                   filters: Map[String, Any] = Map.empty,
                   probe: String = settings.defaultProbe,
@@ -1477,15 +1483,13 @@ final class VectorEngine private (val spark: SparkSession,
       .toDF()
     val qDf = queries.toDF("query_id", "qvec")
       .withColumn("qvec", col("qvec").cast("array<float>"))
+    val metric = lib.distance_metric
+    val layout = QueryTopK.Layout(scoped, queries.map(_._1))
     // Probe plan: a (query_id, qvec, qbucket) frame joined on the stored
     // index-key column, plus whether the per-query `< k` count/fallback
     // pass is still needed. Adaptive probing doesn't need it: its prefix
     // guarantees >= min(|allow-set|, k) candidates per query by
     // construction, which is exactly what the fallback would deliver.
-    // which queries fell back to the full (every-cell) scan in the ivf
-    // two-phase split below: the residual-pq ADC needs per-(query, cell)
-    // LUTs for exactly the cells each query's rows carry
-    var fallbackSet: Set[Long] = Set.empty
     val probePlan: Option[(DataFrame, Boolean)] = lib.index_kind match {
       case IndexKindLsh =>
         val m = matrices(libraryId).matrix.map(_.toArray).toArray
@@ -1537,195 +1541,159 @@ final class VectorEngine private (val spark: SparkSession,
     // pass reads the compact columns (codes/qmin/qmax) and NEVER the
     // float32 embedding bytes — those are read once, for the O(Q x R)
     // rescore survivors only.
+    val pqModel = if (lib.storage == StoragePq) pqModels.get(libraryId) else None
+    val residual = pqModel.isDefined && pqResidual(lib)
+    val exactOnly = lib.storage != StorageSq8 && lib.storage != StorageBq &&
+      pqModel.isEmpty
     val dataCols: Seq[Column] =
       if (lib.storage == StorageSq8)
         Seq(col("codes"), col("qmin"), col("qmax"))
       else if (lib.storage == StorageBq)
         Seq(col("codes"))
-      else if (lib.storage == StoragePq && pqModels.contains(libraryId))
+      else if (pqModel.isDefined)
         Seq(col("codes")) ++
-          (if (pqResidual(lib)) Seq(col("bucket")) else Nil) ++
-          (if (lib.distance_metric == "cosine") Seq(col("qmin")) else Nil)
+          (if (residual) Seq(col("bucket")) else Nil) ++
+          (if (metric == "cosine") Seq(col("qmin")) else Nil)
       else Seq(col("embedding"))
     val pairCols = Seq(col("query_id"), col("id")) ++ dataCols :+ col("qvec")
-    val pairs: DataFrame = probePlan match {
-      case None =>
-        scoped.crossJoin(broadcast(qDf)).select(pairCols: _*)
-      case Some((qb, needTwoPhase)) =>
-        val cand = scoped.join(broadcast(qb), col("bucket") === col("qbucket"))
-          .select(pairCols: _*)
-        if (!needTwoPhase) cand
-        else {
-          // The count pass re-runs the probe join but over a COLUMN-PRUNED
-          // scan (bucket only — no embedding bytes): the expensive width is
-          // read once, in the result plan below. No caching, so repeated
-          // batch searches leave no storage residue behind.
-          val counts = scoped.select(col("bucket"))
-            .join(broadcast(qb.select(col("query_id"), col("qbucket"))),
-              col("bucket") === col("qbucket"))
-            .groupBy("query_id").count().collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val bucketQs = queries.map(_._1).filter(counts.getOrElse(_, 0L) >= k)
-          val fallbackQs = queries.map(_._1).filterNot(bucketQs.toSet)
-          fallbackSet = fallbackQs.toSet
-          val parts = Seq(
-            if (bucketQs.nonEmpty)
-              Some(cand.where(col("query_id").isin(bucketQs: _*)))
-            else None,
-            if (fallbackQs.nonEmpty)
-              Some(scoped.crossJoin(
-                  broadcast(qDf.where(col("query_id").isin(fallbackQs: _*))))
-                .select(pairCols: _*))
-            else None).flatten
-          parts.reduce(_ unionByName _)
-        }
-    }
-    val scored =
-      if (lib.storage == StorageBq) {
-        // batch bq two-phase: per-pair Hamming over the stored int
-        // words (the query's words re-packed in-plan from qvec — a
-        // handful of 31-bit words, e.g. 3 at dim 64; cheaper than
-        // another broadcast join), salted
-        // top-R per query, ONE exact-rescore join. Bit-identical to Q
-        // single bq searches (EngineSpec locks this).
-        val r = math.max(k, rescore)
-        val approx = pairs
-          .withColumn("approx", graft.operators.BinaryQuantization.hamming(
-            col("codes"), graft.operators.BinaryQuantization.encodeWordsInt(
-              col("qvec"), lib.embedding_dimension)))
-          .select(col("query_id"), col("id"), col("approx"))
-        val survivors = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else if (lib.storage == StorageSq8) {
-        // batch two-phase: approx top-R per query on the codes (the salted
-        // TopK reduction, like the exact phase), then ONE exact-rescore
-        // join touching O(Q x R) embedding rows. Bit-identical to Q single
-        // sq8 searches (EngineSpec locks this).
-        val r = math.max(k, rescore)
-        val approx = pairs
-          .withColumn("approx", VectorExpressions.sq8DistanceBatch(
-            col("codes"), col("qmin"), col("qmax"), col("qvec"),
-            lib.distance_metric))
-          .select(col("query_id"), col("id"), col("approx"))
-        val survivors = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else if (lib.storage == StoragePq && pqModels.contains(libraryId) &&
-          pqResidual(lib)) {
-        // batch RESIDUAL ADC (IVFPQ): the LUT frame is keyed by
-        // (query_id, cell) — probed cells per query, every cell for the
-        // fallback queries — carrying the same (const, luts) doubles the
-        // single-query path builds, joined on the stored bucket cell, so
-        // batch results stay bit-identical to Q single searches. Per
-        // query the frame is O(nprobe · M · K) doubles (euclidean) or
-        // O(M · K + nprobe) (dot/cosine — the LUT is cell-independent).
-        val model = pqModels(libraryId)
-        val cs = cellModels(libraryId)
-        val metric = lib.distance_metric
-        val r = math.max(k, rescore)
-        // LUTs only for queries whose rows are cell-pruned; a FALLBACK
-        // query scans every cell, and its exact path below needs no LUT
-        // at all — building per-cell LUTs for all C cells would be
-        // O(C·M·K) driver work per fallback query (the single path's
-        // exactScan note)
-        val lutRows = queries.filterNot(q => fallbackSet(q._1))
-          .flatMap { case (qid, q) =>
-            val cells = IvfIndex.nearestCentroids(q.toArray, cs, nprobe)
-            val qn = ProductQuantization.normLocal(q)
-            ProductQuantization.residualLutRows(model, cs, cells,
-              q.toArray, metric)
-              .map { case (cell, const, luts) => (qid, cell, const, luts, qn) }
+    // The probed queries' candidate pairs, and the queries that scan the
+    // whole allow-set (no index, or fewer than k probe candidates).
+    val (probed, scanAll): (Option[DataFrame], Seq[(Long, Seq[Float])]) =
+      probePlan match {
+        case None => (None, queries)
+        case Some((qb, needTwoPhase)) =>
+          val cand = scoped.join(broadcast(qb), col("bucket") === col("qbucket"))
+            .select(pairCols: _*)
+          if (!needTwoPhase) (Some(cand), Nil)
+          else {
+            // The count pass re-runs the probe join but over a COLUMN-PRUNED
+            // scan (bucket only — no embedding bytes): the expensive width is
+            // read once, in the result plan below. No caching, so repeated
+            // batch searches leave no storage residue behind.
+            val counts = scoped.select(col("bucket"))
+              .join(broadcast(qb.select(col("query_id"), col("qbucket"))),
+                col("bucket") === col("qbucket"))
+              .groupBy("query_id").count().collect()
+              .map(r => r.getLong(0) -> r.getLong(1)).toMap
+            val bucketQs = queries.map(_._1).filter(counts.getOrElse(_, 0L) >= k)
+            val inBucket = bucketQs.toSet
+            (if (bucketQs.nonEmpty)
+               Some(cand.where(col("query_id").isin(bucketQs: _*)))
+             else None,
+             queries.filterNot(q => inBucket(q._1)))
           }
-        val lutDf = broadcast(
-          lutRows.toDF("query_id", "__cell", "__const", "__lut", "__qnorm"))
-        val sumLut = model.indices.map { m =>
-          element_at(element_at(col("__lut"), m + 1),
-            col("codes").getItem(m).cast("int") + lit(1))
-        }.foldLeft(col("__const"))(_ + _)
-        val approxCol = ProductQuantization.approxColumn(sumLut, metric,
-          if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm"))
-        // the inner LUT join keeps only the cell-pruned queries' pairs
-        val approx = pairs.join(lutDf, Seq("query_id"))
-          .where(col("bucket") === col("__cell"))
-          .withColumn("approx", approxCol)
-          .select(col("query_id"), col("id"), col("approx"))
-        val survApprox = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        // fallback queries: EVERY candidate survives to the exact rescore
-        // — the batch twin of the single path's exactScan fallback
-        // (identical distance formula, so batch == single stays exact)
-        val survivors =
-          if (fallbackSet.isEmpty) survApprox
-          else survApprox.unionByName(
-            pairs.where(col("query_id").isin(fallbackSet.toSeq: _*))
-              .select(col("query_id"), col("id")))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else if (lib.storage == StoragePq && pqModels.contains(libraryId)) {
-        // batch ADC: each query's M x K lookup table rides in as a
-        // broadcast column (the same doubles the single-query path embeds
-        // as literals, added in the same order — batch results are
-        // bit-identical to Q single searches, like sq8), approx top-R per
-        // query on the codes, ONE exact-rescore join for O(Q x R) rows.
-        // Cosine additionally divides by the stored qmin norm and the
-        // per-query norm riding in the same broadcast frame.
-        val model = pqModels(libraryId)
-        val metric = lib.distance_metric
+      }
+    val exactDistance =
+      round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d)
+    // exact float32 scoring of every allow-set row against the scanning
+    // queries: the QueryTopK scan step, <= |scanAll|·k rows per partition
+    lazy val scanned =
+      if (scanAll.isEmpty) None
+      else Some(QueryTopK.scan(scoped, "id", "embedding", scanAll, metric, k, layout))
+    val heaps: Seq[DataFrame] =
+      if (exactOnly)
+        probed.map(p => QueryTopK.local(
+          p.withColumn("distance", exactDistance)
+            .select(col("query_id"), col("id"), col("distance")),
+          "id", "distance", k, layout)).toSeq ++ scanned
+      else {
+        // compact storage scans TWO-PHASE: approximate top-R per query over
+        // the stored codes, then ONE exact-rescore join touching O(Q x R)
+        // embedding rows. Each phase-1 score is the one the single-query
+        // path computes, so batch results stay bit-identical to Q single
+        // searches (EngineSpec locks this). A residual-pq library's
+        // scanning queries take the exact scan instead: per-cell LUTs for
+        // EVERY cell would be O(C·M·K) driver work per query (the single
+        // path's exactScan note), and exact is what the fallback
+        // guarantees anyway.
         val r = math.max(k, rescore)
-        val luts = queries.map { case (qid, q) =>
-          (qid, ProductQuantization.adcLut(model, q.toArray, metric)
-            .map(_.toSeq).toSeq,
-            ProductQuantization.normLocal(q))
-        }
-        val lutDf = broadcast(luts.toDF("query_id", "__lut", "__qnorm"))
-        val sumLut = model.indices.map { m =>
-          element_at(element_at(col("__lut"), m + 1),
-            col("codes").getItem(m).cast("int") + lit(1))
-        }.reduce(_ + _)
-        val approxCol = ProductQuantization.approxColumn(sumLut, metric,
-          if (metric == "cosine") Some(col("qmin")) else None, col("__qnorm"))
-        val approx = pairs.join(lutDf, Seq("query_id"))
-          .withColumn("approx", approxCol)
-          .select(col("query_id"), col("id"), col("approx"))
-        val survivors = graft.operators.TopK
-          .perGroup(approx, "query_id", "approx", "id", r)
-          .select(col("query_id"), col("id"))
-        scoped.select(col("id"), col("embedding"))
-          .join(broadcast(survivors), Seq("id"))
-          .join(broadcast(qDf), Seq("query_id"))
-          .withColumn("distance",
-            round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-              + lit(0.0d))
-          .select(col("query_id"), col("id"), col("distance"))
-      } else pairs
-        .withColumn("distance",
-          round(distance(lib.distance_metric)(col("embedding"), col("qvec")), 6)
-            + lit(0.0d))
-        .select(col("query_id"), col("id"), col("distance"))
-    graft.operators.TopK.perGroup(scored, "query_id", "distance", "id", k)
+        val fullPairs =
+          if (scanAll.isEmpty || residual) None
+          else Some(scoped.crossJoin(broadcast(
+              if (scanAll.size == queries.size) qDf
+              else qDf.where(col("query_id").isin(scanAll.map(_._1): _*))))
+            .select(pairCols: _*))
+        val rescored = (probed.toSeq ++ fullPairs).reduceOption(_ unionByName _)
+          .map { pairs =>
+            val approx = lib.storage match {
+              case StorageBq =>
+                // per-pair Hamming over the stored int words (the query's
+                // words re-packed in-plan from qvec — a handful of 31-bit
+                // words, e.g. 3 at dim 64; cheaper than another broadcast)
+                pairs.withColumn("approx", BinaryQuantization.hamming(
+                  col("codes"), BinaryQuantization.encodeWordsInt(
+                    col("qvec"), lib.embedding_dimension)))
+              case StorageSq8 =>
+                pairs.withColumn("approx", VectorExpressions.sq8DistanceBatch(
+                  col("codes"), col("qmin"), col("qmax"), col("qvec"), metric))
+              case _ if residual =>
+                // batch RESIDUAL ADC (IVFPQ): the LUT frame is keyed by
+                // (query_id, cell) — each probed query's cells — carrying
+                // the same (const, luts) doubles the single-query path
+                // builds, joined on the stored bucket cell. Per query the
+                // frame is O(nprobe · M · K) doubles (euclidean) or
+                // O(M · K + nprobe) (dot/cosine — the LUT is
+                // cell-independent).
+                val model = pqModel.get
+                val cs = cellModels(libraryId)
+                val scanning = scanAll.map(_._1).toSet
+                val lutRows = queries.filterNot(q => scanning(q._1))
+                  .flatMap { case (qid, q) =>
+                    val cells = IvfIndex.nearestCentroids(q.toArray, cs, nprobe)
+                    val qn = ProductQuantization.normLocal(q)
+                    ProductQuantization.residualLutRows(model, cs, cells,
+                      q.toArray, metric)
+                      .map { case (cell, const, luts) => (qid, cell, const, luts, qn) }
+                  }
+                val lutDf = broadcast(
+                  lutRows.toDF("query_id", "__cell", "__const", "__lut", "__qnorm"))
+                val sumLut = model.indices.map { m =>
+                  element_at(element_at(col("__lut"), m + 1),
+                    col("codes").getItem(m).cast("int") + lit(1))
+                }.foldLeft(col("__const"))(_ + _)
+                pairs.join(lutDf, Seq("query_id"))
+                  .where(col("bucket") === col("__cell"))
+                  .withColumn("approx", ProductQuantization.approxColumn(sumLut,
+                    metric, if (metric == "cosine") Some(col("qmin")) else None,
+                    col("__qnorm")))
+              case _ =>
+                // batch ADC: each query's M x K lookup table rides in as a
+                // broadcast column (the same doubles the single-query path
+                // embeds as literals, added in the same order); cosine
+                // additionally divides by the stored qmin norm and the
+                // per-query norm riding in the same broadcast frame.
+                val model = pqModel.get
+                val luts = queries.map { case (qid, q) =>
+                  (qid, ProductQuantization.adcLut(model, q.toArray, metric)
+                    .map(_.toSeq).toSeq,
+                    ProductQuantization.normLocal(q))
+                }
+                val lutDf = broadcast(luts.toDF("query_id", "__lut", "__qnorm"))
+                val sumLut = model.indices.map { m =>
+                  element_at(element_at(col("__lut"), m + 1),
+                    col("codes").getItem(m).cast("int") + lit(1))
+                }.reduce(_ + _)
+                pairs.join(lutDf, Seq("query_id"))
+                  .withColumn("approx", ProductQuantization.approxColumn(sumLut,
+                    metric, if (metric == "cosine") Some(col("qmin")) else None,
+                    col("__qnorm")))
+            }
+            val survivors = QueryTopK.perQuery(
+                approx.select(col("query_id"), col("id"), col("approx")),
+                "id", "approx", r, layout)
+              .select(col("query_id"), col("id"))
+            QueryTopK.local(
+              scoped.select(col("id"), col("embedding"))
+                .join(broadcast(survivors), Seq("id"))
+                .join(broadcast(qDf), Seq("query_id"))
+                .withColumn("distance", exactDistance)
+                .select(col("query_id"), col("id"), col("distance")),
+              "id", "distance", k, layout)
+          }
+        rescored.toSeq ++ (if (residual) scanned else None)
+      }
+    QueryTopK.merge(heaps.reduce(_ unionByName _), "id", "distance", k, layout)
       .withColumnRenamed("id", "chunk_id")
-      .orderBy(col("query_id"), col("distance"), col("chunk_id"))
   }
 
   /** HYBRID retrieval at the facade — BM25 lexical ranking over the
@@ -2504,10 +2472,12 @@ final class VectorEngine private (val spark: SparkSession,
       catch { case e: Exception => throw StorageError(s"no engine state at $dir: ${e.getMessage}") }
     val base = s"$dir/$version"
     val libsRaw = spark.read.parquet(s"$base/libraries.parquet")
-    // pre-sq8 state dirs have no storage column: everything was float32
+    // pre-sq8 state dirs have no storage column: everything was float32.
+    // The libraries table is tiny: held as a local Dataset, a library
+    // lookup folds into a LocalRelation and runs no Spark job.
     libs = (if (libsRaw.columns.contains("storage")) libsRaw
             else libsRaw.withColumn("storage", lit(StorageFloat32)))
-      .as[LibraryRow]
+      .as[LibraryRow].collect().toSeq.toDS()
     docs = spark.read.parquet(s"$base/documents.parquet").as[DocumentRow]
     chunks = readChunksTable(dir)
     matrices = spark.read.parquet(s"$base/matrices.parquet").as[MatrixRow]

@@ -4,10 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Salted two-phase per-group top-k — THE batch k-NN reduction shape
-  * (SURVEY.md §7.4: a single window over the group key would shuffle all
-  * N x Q scored rows into only Q partitions, a skew killer when Q is
-  * small).
+/** Salted two-phase per-group top-k, for groups that are NOT a
+  * driver-held list: lexical batch ranking (Lexical) and the SQL batch
+  * k-NN query. When the query list sits on the driver — the facade's
+  * `searchBatch` — [[QueryTopK]] reduces with per-partition heaps and one
+  * query-keyed exchange instead. (SURVEY.md §7.4: a single window over
+  * the group key would shuffle all N x Q scored rows into only Q
+  * partitions, a skew killer when Q is small.)
   *
   * Phase 1 takes top-k per (group, salt) — salt x more reduce slots, each
   * emitting at most k rows — so phase 2's per-group window sees only

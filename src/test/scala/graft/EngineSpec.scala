@@ -448,6 +448,76 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("searchBatch is bit-identical to Q single searches under every " +
+    "metric: zero norms, id ties, k > library, filters, a reopened engine, " +
+    "and LSH/IVF batches split between probe and fallback") {
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // batch rows in output order vs the single searches in query_id order
+    def parity(e: VectorEngine, lib: String, qs: Seq[(Long, Seq[Float])],
+               k: Int, what: String, filters: Map[String, Any] = Map.empty,
+               probe: String = VectorEngine.ProbeAdaptive,
+               nprobe: Option[Int] = None): Unit = {
+      val batch = e.searchBatch(lib, qs, k, filters, probe, nprobe).collect()
+        .map(r => (r.getLong(0), r.getString(1), bits(r.getDouble(2)))).toSeq
+      val single = qs.sortBy(_._1).flatMap { case (qid, q) =>
+        e.search(lib, q, k, filters, probe, nprobe).collect()
+          .map(r => (qid, r.getString(0), bits(r.getDouble(1)))).toSeq
+      }
+      assert(batch == single, what)
+    }
+    // c10 and c9 are exact twins (the tie falls to byte order: "c10" <
+    // "c9"), z0 has zero norm (+Inf under cosine)
+    val chunks = Seq(
+      ("c9", vec(1, 0, 0, 0), 1), ("c10", vec(1, 0, 0, 0), 1),
+      ("c2", vec(2, 0, 0, 0), 2), ("z0", vec(0, 0, 0, 0), 1),
+      ("c3", vec(0, 1, 0, 0), 2), ("c4", vec(0.5, 0.5, 0, 0), 1),
+      ("c5", vec(0, 0, 1, 1), 2), ("c6", vec(-1, 0, 0, 0), 1))
+    // unsorted ids (output is ordered by query_id); query 2 has zero norm
+    val qs = Seq(5L -> vec(1, 0, 0, 0), 2L -> vec(0, 0, 0, 0),
+      9L -> vec(0.3, 0.7, 0.1, 0), 7L -> vec(-1, -1, 0, 0))
+    for (metric <- Seq("cosine", "euclidean", "dot_product")) {
+      val e = VectorEngine.create(spark)
+      val lib = e.createLibrary(s"m-$metric", dim = 4, metric = metric).id
+      val doc = e.createDocument(lib, "d").id
+      e.addChunksBatch(doc, chunks.zipWithIndex.map { case ((id, v, tag), i) =>
+        ChunkInput(id, v, Map("tag" -> tag), i, Some(id))
+      })
+      parity(e, lib, qs, 3, s"$metric k=3")
+      parity(e, lib, qs, 20, s"$metric k > library")
+      parity(e, lib, qs, 2, s"$metric filtered", Map("tag" -> 1))
+      val dir = Files.tmp("graft-batch-bits")
+      e.save(dir)
+      parity(VectorEngine.open(spark, dir), lib, qs, 3, s"$metric reopened")
+    }
+    // LSH: every chunk is a positive multiple of `a`, so `a`'s bucket holds
+    // them all (probe path) and -a's complement bucket is empty (fallback)
+    val a = Seq(0.3, -0.2, 0.9, 0.1)
+    val el = VectorEngine.create(spark)
+    val lsh = el.createLibrary("lsh", dim = 4, indexKind = "random_projection",
+      lshProjections = 4, lshSeed = 11L).id
+    val ld = el.createDocument(lsh, "d").id
+    el.addChunksBatch(ld, (0 until 5).map { i =>
+      ChunkInput(s"l$i", a.map(x => (x * (i + 1)).toFloat), chunkIndex = i,
+        id = Some(s"l$i"))
+    })
+    parity(el, lsh, Seq(1L -> a.map(_.toFloat), 0L -> a.map(x => (-x).toFloat)),
+      2, "lsh probe + fallback", probe = VectorEngine.ProbeSingle)
+    // IVF, nprobe = 1: cell 0 holds three chunks (probe path at k = 2),
+    // cell 1 holds one (fallback)
+    val ei = VectorEngine.create(spark)
+    val ivf = ei.createLibrary("ivf", dim = 4, metric = "euclidean",
+      indexKind = "ivf").id
+    val idoc = ei.createDocument(ivf, "d").id
+    ei.addChunksBatch(idoc, Seq(
+      ChunkInput("a", vec(1, 0, 0, 0), chunkIndex = 0, id = Some("i0")),
+      ChunkInput("b", vec(0.9, 0.1, 0, 0), chunkIndex = 1, id = Some("i1")),
+      ChunkInput("c", vec(0.8, 0, 0.1, 0), chunkIndex = 2, id = Some("i2")),
+      ChunkInput("d", vec(0, 1, 0, 0), chunkIndex = 3, id = Some("i3"))))
+    ei.setIvfCentroids(ivf, Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 1, 0, 0)))
+    parity(ei, ivf, Seq(3L -> vec(1, 0, 0, 0), 4L -> vec(0, 1, 0, 0)), 2,
+      "ivf probe + fallback", nprobe = Some(1))
+  }
+
   test("incremental save rewrites only the touched library's partition") {
     val dir = Files.tmp("graft-incr")
     val e = VectorEngine.create(spark)

@@ -495,4 +495,29 @@ class PlanSpec extends AnyFunSuite {
     val p = e2.search("libA", Seq(1f, 0f), 1).queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters") && p.contains("libA"))
   }
+
+  test("facade searchBatch on a flat library: scan-step heaps and ONE " +
+    "query-keyed exchange — no nested loop, no window, no global sort") {
+    val e = VectorEngine.create(spark)
+    e.createLibrary("batch", dim = 2, id = Some("libBatch"))
+    val d = e.createDocument("libBatch", "d")
+    e.addChunksBatch(d.id, (0 until 8).map { i =>
+      ChunkInput(s"t$i", Seq(i.toFloat, 1f), chunkIndex = i, id = Some(s"b$i"))
+    })
+    val df = e.searchBatch("libBatch",
+      Seq(1L -> Seq(1f, 0f), 0L -> Seq(0f, 1f), 2L -> Seq(1f, 1f)), k = 3)
+    def check(p: String): Unit = {
+      assert(p.contains("Generate scantopk") && p.contains("Generate heaptopk"), p)
+      Seq("BroadcastNestedLoopJoin", "CartesianProduct", "Window",
+        "SinglePartition", "rangepartitioning").foreach { op =>
+        assert(!p.contains(op), s"$op in\n$p")
+      }
+    }
+    val initial = df.queryExecution.executedPlan.toString
+    check(initial)
+    assert(initial.split("Exchange").length - 1 == 1, initial)
+    val rows = df.collect().map(r => (r.getLong(0), r.getDouble(2), r.getString(1)))
+    assert(rows.length == 9 && rows.toSeq == rows.sorted.toSeq)
+    check(df.queryExecution.executedPlan.toString)
+  }
 }

@@ -322,6 +322,66 @@ object PropertySpec extends Properties("graft") {
     }
   }
 
+  property("QueryTopK merge == unsalted global window: many partitions, " +
+    "empty ones, tied distances, +Inf rows, k past a query's candidates") = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.QueryTopK
+    val rowGen = Gen.zip(Gen.chooseNum(0L, 4L), Gen.chooseNum(0, 30),
+      Gen.oneOf(0.0d, 0.25d, 0.5d, 1.0d, Double.PositiveInfinity))
+    forAll(Gen.listOfN(40, rowGen), Gen.chooseNum(1, 12), Gen.chooseNum(1, 9),
+      Gen.chooseNum(1, 6)) { (rows, k, inParts, outParts) =>
+      // ids "c0".."c30" compare by bytes ("c10" < "c9"); qid 5 never
+      // occurs, so its query has no candidates at all
+      val df = spark.sparkContext
+        .parallelize(rows.map { case (q, i, d) => (q, s"c$i", d) }, inParts)
+        .toDF("query_id", "id", "d")
+      val layout = new QueryTopK.Layout(Seq(3L, 0L, 5L, 1L, 4L, 2L), outParts)
+      val got = QueryTopK.perQuery(df, "id", "d", k, layout)
+        .as[(Long, String, Double)].collect().toSeq
+      val w = Window.partitionBy(col("query_id")).orderBy(col("d"), col("id"))
+      val want = df.withColumn("rn", row_number().over(w))
+        .where(col("rn") <= k)
+        .orderBy(col("query_id"), col("d"), col("id"))
+        .select("query_id", "id", "d").as[(Long, String, Double)]
+        .collect().toSeq
+      got == want
+    }
+  }
+
+  property("QueryTopK scan step == crossJoin + distance + window under " +
+    "all three metrics (zero-norm rows and queries included)") = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.operators.QueryTopK
+    // a coarse value grid forces exact distance ties between ids
+    val gridVec = Gen.listOfN(4, Gen.oneOf(-1.0f, 0.0f, 0.5f, 1.0f)).map(_.toSeq)
+    forAll(Gen.listOfN(24, gridVec), Gen.listOfN(3, gridVec),
+      Gen.oneOf("cosine", "euclidean", "dot_product"), Gen.chooseNum(1, 30),
+      Gen.chooseNum(1, 5)) { (vs, qv, metric, k, parts) =>
+      val base = spark.createDataFrame(spark.sparkContext.parallelize(
+          vs.zipWithIndex.map { case (v, i) => (s"c$i", v) }, parts))
+        .toDF("id", "embedding")
+        .withColumn("embedding", col("embedding").cast("array<float>"))
+      val qs = qv.zipWithIndex.map { case (q, i) => (10L - i, q) }
+      val layout = QueryTopK.Layout(base, qs.map(_._1))
+      val got = QueryTopK.merge(
+          QueryTopK.scan(base, "id", "embedding", qs, metric, k, layout),
+          "id", "distance", k, layout)
+        .as[(Long, String, Double)].collect().toSeq
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("distance"), col("id"))
+      val want = base.crossJoin(broadcast(qs.toDF("query_id", "qvec")
+          .withColumn("qvec", col("qvec").cast("array<float>"))))
+        .withColumn("distance",
+          round(distance(metric)(col("embedding"), col("qvec")), 6) + lit(0.0d))
+        .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+        .orderBy(col("query_id"), col("distance"), col("id"))
+        .select("query_id", "id", "distance").as[(Long, String, Double)]
+        .collect().toSeq
+      got.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3))) ==
+        want.map(r => (r._1, r._2, java.lang.Double.doubleToRawLongBits(r._3)))
+    }
+  }
+
   property("as-of join == per-row brute-force latest-at-or-before") = {
     import graft.operators.AsOfJoin
     val tsGen = Gen.chooseNum(0L, 40L)
