@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.functions.{MetadataFunctions, VectorExpressions}
-import graft.operators.{BinaryQuantization, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, QueryTopK, TrainingData}
+import graft.operators.{BinaryQuantization, ExactRescore, IvfIndex, Lexical, LshIndex, NearDup, ProductQuantization, Quantization, QueryTopK, TrainingData}
 import java.sql.Timestamp
 import java.nio.file.{Files, Paths}
 
@@ -34,7 +34,9 @@ final class VectorEngine private (val spark: SparkSession,
   import spark.implicits._
   import VectorEngine._
 
-  private var libs: Dataset[LibraryRow] = spark.emptyDataset[LibraryRow]
+  /** The libraries table, held on the driver: it has one row per library,
+    * so a lookup is plain Scala and never a Spark query. */
+  private var libs: Vector[LibraryRow] = Vector.empty
   private var docs: Dataset[DocumentRow] = spark.emptyDataset[DocumentRow]
   private var chunks: Dataset[ChunkRow] = spark.emptyDataset[ChunkRow]
   /** Per-library LSH projection matrix (only for index_kind=random_projection). */
@@ -77,7 +79,7 @@ final class VectorEngine private (val spark: SparkSession,
   // -------------------------------------------------------------------
   // Read-only views (the query surface)
   // -------------------------------------------------------------------
-  def librariesDf: DataFrame = libs.toDF()
+  def librariesDf: DataFrame = libs.toDS().toDF()
   def documentsDf: DataFrame = docs.toDF()
   def chunksDf: DataFrame = chunks.toDF()
 
@@ -114,8 +116,8 @@ final class VectorEngine private (val spark: SparkSession,
   // filter/union on the previous Dataset, so after N mutations the logical
   // plan holds O(N) nodes and analysis cost grows superlinearly — a
   // long-lived engine would eventually OOM the DRIVER on plan metadata,
-  // not data. Every CompactEvery mutations the three tables are
-  // localCheckpoint()ed: lineage truncates to a materialized RDD (a
+  // not data. Every CompactEvery mutations the documents and chunks
+  // tables are localCheckpoint()ed (libraries live on the driver): lineage truncates to a materialized RDD (a
   // distributed operation — never a driver collect, so it is safe even
   // when chunks is a reopened 100 TB parquet table that has since been
   // mutated). Bulk appends don't count: they add one union node per
@@ -185,7 +187,6 @@ final class VectorEngine private (val spark: SparkSession,
   private def afterMutation(): Unit = {
     mutationsSinceCompact += 1
     if (mutationsSinceCompact >= CompactEvery) {
-      libs = libs.localCheckpoint()
       docs = docs.localCheckpoint()
       chunks = chunks.localCheckpoint()
       mutationsSinceCompact = 0
@@ -197,7 +198,7 @@ final class VectorEngine private (val spark: SparkSession,
     * library for every child add/remove). Counts here are derived, but
     * the TIMESTAMP bump is API-observable and must match. */
   private def touchLibrary(id: String, t: Timestamp): Unit =
-    findLibrary(id).foreach(l => libs = replaceById(libs, id, l.copy(updated_at = t)))
+    findLibrary(id).foreach(l => replaceLibrary(l.copy(updated_at = t)))
 
   private def touchDocument(id: String, t: Timestamp): Unit =
     findDocument(id).foreach(d => docs = replaceById(docs, id, d.copy(updated_at = t)))
@@ -251,7 +252,7 @@ final class VectorEngine private (val spark: SparkSession,
     val t = now()
     val row = LibraryRow(lid, name, description, encodeMeta(metadata),
       dim, metric, indexKind, storage, t, t)
-    libs = libs.unionByName(Seq(row).toDS())
+    libs :+= row
     // The MatrixRow doubles as the remembered LSH configuration: recorded
     // for LSH libraries AND for flat libraries created with non-default
     // params, so a later index_kind flip (patchLibrary) rebuilds with the
@@ -265,14 +266,16 @@ final class VectorEngine private (val spark: SparkSession,
     row
   }
 
-  private def findLibrary(id: String): Option[LibraryRow] =
-    libs.where(col("id") === id).collect().headOption
+  private def findLibrary(id: String): Option[LibraryRow] = libs.find(_.id == id)
+
+  private def replaceLibrary(row: LibraryRow): Unit =
+    libs = libs.filterNot(_.id == row.id) :+ row
 
   def getLibrary(id: String): LibraryRow =
     findLibrary(id).getOrElse(throw NotFoundError("library", id))
 
   def listLibraries(skip: Int = 0, limit: Int = DefaultPageLimit): Page[LibraryRow] =
-    page(libs.orderBy(col("created_at"), col("id")).as[LibraryRow], skip, limit)
+    page(libs.toDS().orderBy(col("created_at"), col("id")).as[LibraryRow], skip, limit)
 
   /** Partial update (exclude-unset merge, services.py:41-45). Dimension and
     * index-kind changes are REJECTED while the library has chunks
@@ -319,7 +322,7 @@ final class VectorEngine private (val spark: SparkSession,
       distance_metric = metric.getOrElse(cur.distance_metric),
       index_kind = indexKind.getOrElse(cur.index_kind),
       updated_at = now())
-    libs = replaceById(libs, id, next)
+    replaceLibrary(next)
     if ((dimChange || kindChange) && cur.storage == StoragePq)
       // the installed codebooks partition the OLD dimension (dim change)
       // or were trained for the OLD index kind's encoding (kind change:
@@ -373,7 +376,7 @@ final class VectorEngine private (val spark: SparkSession,
     * J6 anti-join semantics via the denormalized library_id). */
   def deleteLibrary(id: String): Unit = {
     getLibrary(id)
-    libs = libs.where(col("id") =!= id).as[LibraryRow]
+    libs = libs.filterNot(_.id == id)
     docs = docs.where(col("library_id") =!= id).as[DocumentRow]
     chunks = chunks.where(col("library_id") =!= id).as[ChunkRow]
     matrices -= id
@@ -1290,62 +1293,47 @@ final class VectorEngine private (val spark: SparkSession,
       throw SearchError(
         s"query dimension ${query.length} != library dimension ${lib.embedding_dimension}")
     val metaPred = MetadataFunctions.filterPredicate(col("metadata"), filters)
+    // an empty allow-set needs no probe: every path below returns no rows
+    // for it (vector_store.py:256-258 short-circuits the same way)
     val scoped = chunks.where(col("library_id") === libraryId).where(metaPred)
-    // empty allow-set short-circuits: the index is never consulted
-    // (vector_store.py:256-258)
-    if (filters.nonEmpty && scoped.limit(1).count() == 0)
-      return spark.emptyDataset[(String, Double)].toDF("chunk_id", "distance")
-    val qvec = array(query.map(f => lit(f)): _*).cast("array<float>")
-    // A storage="sq8" library scans TWO-PHASE wherever a float32 one would
-    // scan flat: approximate top-R over the stored uint8 codes (column
-    // pruning — the float32 embedding bytes are never read in phase 1),
-    // exact rescore of the R survivors. Literally Quantization.search over
-    // the same base the flat scan would read, so an ivf+sq8 library runs
-    // the full funnel: cell prune -> codes scan -> O(R) rescore.
     def exactScan(base: DataFrame): DataFrame =
-      base.withColumn("distance",
-          round(distance(lib.distance_metric)(col("embedding"), qvec), 6)
-            + lit(0.0d))
-        .select(col("id"), col("distance"))
-        .orderBy(col("distance"), col("id"))
-        .limit(k)
-    def flatScan(base: DataFrame, pqCells: Seq[Long] = Nil): DataFrame =
+      ExactRescore.exact(base, "embedding", "id", query.toArray,
+        lib.distance_metric, k)
+    // Compact storage (sq8/bq/pq) searches TWO-PHASE wherever float32
+    // scans exactly: phase 1 ranks the stored codes only (the float32
+    // embedding bytes are never read) and keeps the top-R ids, a lazy
+    // frame; None for float32 (and pq without codebooks), whose phase 1
+    // is the exact top-k itself. Under ivf the base is the probed cells,
+    // so the full funnel composes: cell prune -> codes scan -> O(R)
+    // rescore. A residual (IVFPQ) library joins per-cell LUTs on the
+    // stored cell column; `pqCells` is the PROBED set only.
+    val r = math.max(k, rescore)
+    def shortList(base: DataFrame, pqCells: Seq[Long]): Option[DataFrame] =
       if (lib.storage == StorageSq8)
-        Quantization.search(base.toDF(), "embedding", "id", query.toArray,
-          k, math.max(k, rescore), lib.distance_metric)
+        Some(Quantization.shortList(base, "id", query.toArray, r,
+          lib.distance_metric))
       else if (lib.storage == StorageBq)
-        // bq scans TWO-PHASE like sq8: Hamming top-R over the packed
-        // sign words only (1 bit/dim — 1/32 the scanned bytes), exact
-        // cosine rescore of the R survivors; under ivf the base is the
-        // probed cells, so the full funnel composes
-        BinaryQuantization.searchStored(base.toDF(), "embedding", "id",
-          query.toArray, k, math.max(k, rescore), lib.distance_metric)
+        // sign-bit Hamming over the packed words: 1 bit/dim, 1/32 the
+        // scanned bytes
+        Some(BinaryQuantization.shortListStored(base, "id", query.toArray, r))
       else if (lib.storage == StoragePq && pqModels.contains(libraryId) &&
           pqResidual(lib))
-        // IVFPQ: residual ADC — per-cell LUTs join on the stored cell
-        // (bucket) column; `pqCells` is the PROBED set only. The
-        // exhaustive `< k` fallback never reaches here (the ivf branch
-        // routes it to exactScan: building per-cell euclidean LUTs for
-        // EVERY cell would be O(C·M·K) driver-built broadcast doubles —
-        // unbounded in C — while the exact scan is the correctness
-        // baseline the fallback exists to guarantee anyway)
-        ProductQuantization.searchResidual(base.toDF(), "embedding", "id",
+        Some(ProductQuantization.shortListResidual(base, "id",
           pqModels(libraryId), cellModels(libraryId), pqCells,
-          query.toArray, k, math.max(k, rescore),
-          metric = lib.distance_metric, codesCol = "codes",
-          cellCol = "bucket", normCol = Some("qmin"))
+          query.toArray, r, metric = lib.distance_metric, codesCol = "codes",
+          cellCol = "bucket", normCol = Some("qmin")))
       else if (lib.storage == StoragePq && pqModels.contains(libraryId))
-        // same two-phase shape: ADC over the stored codes (compact-only
-        // scan — plus the stored qmin norm for cosine), exact rescore of
-        // the R survivors under the library metric
-        ProductQuantization.search(base.toDF(), "embedding", "id",
-          pqModels(libraryId), query.toArray, k, math.max(k, rescore),
-          metric = lib.distance_metric, codesCol = "codes",
-          normCol = Some("qmin"))
-      else exactScan(base)
+        Some(ProductQuantization.shortList(base, "id", pqModels(libraryId),
+          query.toArray, r, metric = lib.distance_metric, codesCol = "codes",
+          normCol = Some("qmin")))
+      else None
+    def funnel(base: DataFrame): DataFrame =
+      shortList(base, Nil).fold(exactScan(base))(sl => ExactRescore.refine(
+        sl, base, "embedding", "id", query.toArray, lib.distance_metric, k))
     val result =
       if (lib.index_kind == IndexKindLsh) {
         val m = matrices(libraryId).matrix.map(_.toArray).toArray
+        val qvec = array(query.map(f => lit(f)): _*).cast("array<float>")
         val q = spark.range(1).select(qvec.as("qvec"),
           lshBucket(qvec, m).as("qbucket"))
         probe match {
@@ -1364,19 +1352,29 @@ final class VectorEngine private (val spark: SparkSession,
       } else if (lib.index_kind == IndexKindIvf && cellModels.contains(libraryId)) {
         val probed = IvfIndex.nearestCentroids(query.toArray,
           cellModels(libraryId), nprobe)
-        val cand = scoped.toDF().where(col("bucket").isin(probed: _*))
-        // two-phase: early-stop candidate count, full scan when < k. A
-        // residual-pq library's exhaustive fallback is the EXACT scan
-        // (see flatScan's residual note: all-cell LUTs are O(C·M·K)
-        // driver work, and exact is what the fallback guarantees)
-        val enough = cand.limit(k).count() >= k
-        if (enough) flatScan(cand, probed)
+        val cand = scoped.toDF().where(inSet(col("bucket"), probed))
+        // two-phase: the probed cells' short-list is collected once (R >=
+        // k, so it holds >= k ids exactly when the cells hold >= k rows)
+        // and decides between the probe and the full allow-set scan. For
+        // float32 the short-list is the cells' exact top-k, returned as
+        // the plan itself: the caller's frame stays the pushed-filter
+        // probe scan (its row-group pruning is observable on the plan).
+        val sl = shortList(cand, probed)
+        val phase1 = sl.getOrElse(exactScan(cand))
+        val ids = ExactRescore.collectIds(phase1)
+        if (ids.length >= k)
+          sl.fold(phase1)(_ => ExactRescore.topK(cand, "embedding", "id", ids,
+            query.toArray, lib.distance_metric, k))
         else if (lib.storage == StoragePq && pqModels.contains(libraryId) &&
             pqResidual(lib))
+          // a residual-pq library's exhaustive fallback is the EXACT scan:
+          // per-cell LUTs for EVERY cell would be O(C·M·K) driver-built
+          // broadcast doubles, unbounded in C, while the exact scan is
+          // the correctness baseline the fallback exists to guarantee
           exactScan(scoped.toDF())
-        else flatScan(scoped.toDF())
+        else funnel(scoped.toDF())
       } else
-        flatScan(scoped.toDF())
+        funnel(scoped.toDF())
     result.withColumnRenamed("id", "chunk_id")
   }
 
@@ -2321,7 +2319,7 @@ final class VectorEngine private (val spark: SparkSession,
     val version = "v" + System.nanoTime()
     val base = s"$dir/$version"
     try {
-      libs.toDF().write.mode("overwrite").parquet(s"$base/libraries.parquet")
+      libs.toDS().write.mode("overwrite").parquet(s"$base/libraries.parquet")
       docs.toDF().write.mode("overwrite").parquet(s"$base/documents.parquet")
       matrices.values.toSeq.toDS().toDF().write.mode("overwrite")
         .parquet(s"$base/matrices.parquet")
@@ -2472,12 +2470,10 @@ final class VectorEngine private (val spark: SparkSession,
       catch { case e: Exception => throw StorageError(s"no engine state at $dir: ${e.getMessage}") }
     val base = s"$dir/$version"
     val libsRaw = spark.read.parquet(s"$base/libraries.parquet")
-    // pre-sq8 state dirs have no storage column: everything was float32.
-    // The libraries table is tiny: held as a local Dataset, a library
-    // lookup folds into a LocalRelation and runs no Spark job.
+    // pre-sq8 state dirs have no storage column: everything was float32
     libs = (if (libsRaw.columns.contains("storage")) libsRaw
             else libsRaw.withColumn("storage", lit(StorageFloat32)))
-      .as[LibraryRow].collect().toSeq.toDS()
+      .as[LibraryRow].collect().toVector
     docs = spark.read.parquet(s"$base/documents.parquet").as[DocumentRow]
     chunks = readChunksTable(dir)
     matrices = spark.read.parquet(s"$base/matrices.parquet").as[MatrixRow]
@@ -2511,13 +2507,12 @@ final class VectorEngine private (val spark: SparkSession,
     lastSaveDir = Some(dir)
     lastSaveHadChunks = !chunks.isEmpty
     dirtyLibs = Set.empty
-    val allLibs = libs.collect()
     // Histogram index metadata: read the persisted table when present; a
     // pre-histogram state dir marks every LSH library stale instead, so
     // the first adaptive read rebuilds it (one aggregate, once). Every LSH
     // library gets an entry either way — hists membership is what marks a
     // library's histogram as maintained.
-    val lshIds = allLibs.filter(_.index_kind == IndexKindLsh).map(_.id)
+    val lshIds = libs.filter(_.index_kind == IndexKindLsh).map(_.id)
     val histPath = new org.apache.hadoop.fs.Path(s"$base/histograms.parquet")
     val histFs = histPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (histFs.exists(histPath)) {
@@ -2567,8 +2562,7 @@ final class VectorEngine private (val spark: SparkSession,
     * call this to heal a state dir produced or modified outside the
     * engine. One narrow projection — no shuffle. */
   def rebuildIndexKeys(): Unit = {
-    val allLibs = libs.collect()
-    val idxLibs = allLibs.filter(l =>
+    val idxLibs = libs.filter(l =>
       l.index_kind == IndexKindLsh ||
         (l.index_kind == IndexKindIvf && cellModels.contains(l.id)))
     if (idxLibs.nonEmpty) {
@@ -2589,7 +2583,7 @@ final class VectorEngine private (val spark: SparkSession,
     // pq codes are derived index keys too: heal them from the installed
     // codebooks the same way (sq8 codes need no healing — they derive
     // from the vector alone and are written by the same ingest plan)
-    val pqLibs = allLibs.filter(l =>
+    val pqLibs = libs.filter(l =>
       l.storage == StoragePq && pqModels.contains(l.id))
     if (pqLibs.nonEmpty) {
       // residual-aware (pqCodesColumnFor reads the bucket column the
@@ -2826,10 +2820,9 @@ final class VectorEngine private (val spark: SparkSession,
     // aggregates prune the metadata column), and a failed import must
     // leave the engine exactly as it was — empty — not partially
     // hydrated.
-    val newLibs = libsRaw.toDS().localCheckpoint()
     val newDocs = docsAssembled.localCheckpoint()
     val newChunks = chunksAssembled.localCheckpoint()
-    libs = newLibs
+    libs = libsRaw.toVector
     docs = newDocs
     chunks = newChunks
     matrices ++= sidecars.map { case (lid, sc) =>
@@ -2886,7 +2879,7 @@ final class VectorEngine private (val spark: SparkSession,
       for (sub <- Seq("libraries", "documents", "chunks", "indexes"))
         Files.createDirectories(root.resolve(sub))
 
-      val allLibs = libs.orderBy(col("created_at"), col("id"))
+      val allLibs = libs.toDS().orderBy(col("created_at"), col("id"))
         .as[LibraryRow].collect()
       val docCounts = docs.groupBy("library_id").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -3108,8 +3101,8 @@ object VectorEngine {
     * re-rank with source coding", ICASSP 2011; the same short-list-then-
     * refine practice as FAISS's IndexRefineFlat k_factor): at sf0.1,
     * M=8/K=256 measures recall@10 0.93 at R=100 vs 0.83 at R=50 (BENCH
-    * `pq_m8k256_r{50,100}`) — and the exact phase is a broadcast
-    * semi-join over R ids, so the deeper short-list is O(R) extra rows
+    * `pq_m8k256_r{50,100}`) — and the exact phase reads the R ids
+    * through an id filter, so the deeper short-list is O(R) extra rows
     * at ANY corpus size. `search`/`searchBatch` resolve `rescoreOpt =
     * None` to these via [[defaultRescore]] — except residual IVFPQ,
     * which resolves the deeper [[DefaultIvfPqRescore]]. */
@@ -3130,7 +3123,7 @@ object VectorEngine {
     * (C=8, M=8, K=256): nprobe6/R100 = 0.88, nprobe6/R150 = 0.91 — the
     * sweep behind the numbers is the `ivfpq_res_*` BENCH recall lines.
     * Both extra costs are O(1)-ish at any corpus size: +2 probed cells of
-    * codes-only scan, +50 exact-rescore rows in a broadcast semi-join. */
+    * codes-only scan, +50 exact-rescore rows through the id filter. */
   val DefaultIvfPqRescore = 150
   val DefaultIvfPqNProbe = 6
 

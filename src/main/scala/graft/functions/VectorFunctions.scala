@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** Vector math — the engine's distance kernels.
   *
@@ -67,6 +70,18 @@ object VectorFunctions {
   }
 
   val SupportedMetrics: Set[String] = Set("cosine", "euclidean", "dot_product")
+
+  /** `c IN values` for a driver-held value set (probed cells, probed
+    * buckets, a short-list's ids), built as Catalyst's `InSet`. Generated
+    * code holds the set as one reference object, so a new set reuses the
+    * compiled class; `isin` keeps lists of <= 10 as `In`, whose codegen
+    * inlines every literal and compiles anew for every distinct set.
+    * Parquet still receives the predicate as a pushed `In` filter.
+    * `values` must carry the column's Scala type (Long for a bigint
+    * column, String for a string one). */
+  def inSet(c: Column, values: Iterable[Any]): Column =
+    ColumnBridge.column(InSet(ColumnBridge.expression(c),
+      values.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet))
 
   // ------------------------------------------------------------------
   // LSH (random-projection) — reference: vector_db/indexes.py:165-242

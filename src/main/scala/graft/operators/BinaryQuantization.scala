@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * score. Sign-bit Hamming approximates COSINE order (it is blind to
   * magnitude), so search is the same two-phase shape as
   * [[Quantization]]: approximate Hamming top-R over the packed words
-  * only, exact-metric rescore of the R survivors.
+  * only, collected to the driver, then the exact-metric rescore of the
+  * R survivors ([[ExactRescore]]).
   *
   * 62 bits per word, not 64: the packing fold is `acc*2 + bit` (no
   * shift-by-column exists as a portable expression), and DuckDB BIGINT
@@ -123,18 +124,16 @@ object BinaryQuantization {
     s"""list_sum(list_transform(range(1, ${intWordsFor(dim) + 1}), j ->
        |      bit_count(xor($a[j::INT], $b[j::INT]))))::BIGINT""".stripMargin
 
-  /** Two-phase binary search over a table whose packed sign words live
-    * in the shared int-word `codes` column (the storage="bq" funnel):
-    * Hamming top-`rescore` scanning ONLY the codes, exact `metric`
-    * top-`k` rescore of the survivors. Same in-plan dimension guard as
-    * [[search]]. */
-  def searchStored(encoded: DataFrame, embCol: String, idCol: String,
-                   query: Array[Float], k: Int, rescore: Int,
-                   metric: String, codesCol: String = "codes"): DataFrame = {
-    require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
+  /** Phase 1 of [[searchStored]]: the `rescore` ids with the smallest
+    * Hamming distance between the shared int-word `codes` column and the
+    * query's words, ordered by (hamming, id). A lazy frame that reads
+    * ONLY (id, codes). Same in-plan dimension guard as [[shortList]]. */
+  def shortListStored(encoded: DataFrame, idCol: String, query: Array[Float],
+                      rescore: Int, codesCol: String = "codes"): DataFrame = {
+    require(rescore > 0, "need rescore > 0")
     val nWords = intWordsFor(query.length)
     val qWords = encodeWordsInt(litVec(query), query.length)
-    val candidates = encoded
+    encoded
       .select(col(idCol), col(codesCol))
       .withColumn("approx",
         when(size(col(codesCol)) =!= nWords,
@@ -145,26 +144,31 @@ object BinaryQuantization {
       .orderBy(col("approx"), col(idCol))
       .limit(rescore)
       .select(col(idCol))
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(graft.functions.VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
   }
 
-  /** Two-phase binary search over a table carrying the stored `bq`
-    * column: approximate Hamming top-`rescore` scanning ONLY the packed
-    * words, exact `metric` top-`k` on the survivors. Output:
-    * (idCol, distance) with the usual round(…, 6) contract. */
-  def search(encoded: DataFrame, embCol: String, idCol: String,
-             query: Array[Float], k: Int, rescore: Int,
-             metric: String): DataFrame = {
+  /** Two-phase binary search over a table whose packed sign words live
+    * in the shared int-word `codes` column (the storage="bq" funnel):
+    * Hamming top-`rescore` scanning ONLY the codes ([[shortListStored]],
+    * collected), exact `metric` top-`k` rescore of the survivors
+    * ([[ExactRescore]]). */
+  def searchStored(encoded: DataFrame, embCol: String, idCol: String,
+                   query: Array[Float], k: Int, rescore: Int,
+                   metric: String, codesCol: String = "codes"): DataFrame = {
     require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
+    ExactRescore.refine(
+      shortListStored(encoded, idCol, query, rescore, codesCol),
+      encoded, embCol, idCol, query, metric, k)
+  }
+
+  /** Phase 1 of [[search]]: the `rescore` ids with the smallest Hamming
+    * distance over the stored `bq` column, ordered by (hamming, id). A
+    * lazy frame that reads ONLY (id, bq). */
+  def shortList(encoded: DataFrame, idCol: String, query: Array[Float],
+                rescore: Int): DataFrame = {
+    require(rescore > 0, "need rescore > 0")
     val nWords = (query.length + BitsPerWord - 1) / BitsPerWord
     val qWords = encodeWords(litVec(query), query.length)
-    val candidates = encoded
+    encoded
       .select(col(idCol), col("bq"))
       // LOUD in-plan guard: a stored code packed for a different
       // dimension would zip_with-pad to NULL hammings, and ascending
@@ -179,12 +183,18 @@ object BinaryQuantization {
       .orderBy(col("approx"), col(idCol))
       .limit(rescore)
       .select(col(idCol))
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(graft.functions.VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+  }
+
+  /** Two-phase binary search over a table carrying the stored `bq`
+    * column: approximate Hamming top-`rescore` scanning ONLY the packed
+    * words ([[shortList]], collected), exact `metric` top-`k` on the
+    * survivors. Output: (idCol, distance) with the usual round(…, 6)
+    * contract. */
+  def search(encoded: DataFrame, embCol: String, idCol: String,
+             query: Array[Float], k: Int, rescore: Int,
+             metric: String): DataFrame = {
+    require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
+    ExactRescore.refine(shortList(encoded, idCol, query, rescore),
+      encoded, embCol, idCol, query, metric, k)
   }
 }

@@ -198,8 +198,9 @@ object LshIndex {
   }
 
   /** Adaptive multi-probe k-NN: probe the `probePrefix` buckets (an
-    * `isin` filter — partition-prunable at scale, like every other probe
-    * here), exact distances, top-k. The query vector arrives driver-side
+    * `InSet` filter — partition-prunable at scale, like every other probe
+    * here, and compiled once whatever the probe set), exact distances,
+    * top-k. The query vector arrives driver-side
     * (the facade's search signature), so margins and the probe set are
     * driver math.
     *
@@ -233,7 +234,7 @@ object LshIndex {
     val sel = probePrefix(h, bucketOf(ms), ms,
       math.max(k.toLong, k.toLong * multiplier))
     val qvec = array(q.map(x => lit(x)): _*).cast("array<float>")
-    indexed.where(col("bucket").isin(sel: _*))
+    indexed.where(inSet(col("bucket"), sel))
       .withColumn("distance",
         round(distance(metric)(col(embCol), qvec), 6) + lit(0.0d))
       .select(col(idCol), col("distance"))

@@ -29,8 +29,9 @@ import graft.operators.IvfIndex.Centroid
   *     doubles, plan literals) turns the approximate distance into
   *     `numSub` array lookups + adds per row, whole-stage codegen,
   *     scanning ONLY the codes column; the top-`rescore` survivors are
-  *     rescored exactly against float32, top-k — the same two-phase shape
-  *     as `Quantization.search`.
+  *     collected to the driver and rescored exactly against float32
+  *     ([[ExactRescore]]), top-k — the same two-phase shape as
+  *     `Quantization.search`.
   *
   * METRICS. Squared L2 decomposes over concatenated subvectors, so
   * euclidean ADC is the textbook LUT of per-subspace squared distances
@@ -58,9 +59,6 @@ object ProductQuantization {
   /** model(m) = subspace m's K centroids, ID-SORTED with cids 0..K-1
     * (see the Model invariant above). */
   type Model = Seq[Seq[Centroid]]
-
-  private def litVec(v: Array[Float]): Column =
-    array(v.toIndexedSeq.map(x => lit(x)): _*).cast("array<float>")
 
   /** Metrics ADC can serve (cosine additionally needs the stored norm). */
   val SupportedMetrics: Set[String] = Set("euclidean", "dot_product", "cosine")
@@ -323,22 +321,22 @@ object ProductQuantization {
     }
   }
 
-  /** Two-phase residual ADC search over a table with STORED residual
-    * `pq_codes` and a cell column: the per-cell LUT frame rides in as a
-    * broadcast inner join on the cell (which also prunes the scan to
-    * `cells`), approx = const + Σ_m lut[m][code] summed ascending m
-    * (left-associated from the constant — the order a SQL oracle's
-    * `c + ts[1] + ... + ts[M]` chain replays), exact rescore under
-    * `metric`. Callers pass the PROBED cells (or every cell for an
-    * exhaustive fallback). */
-  def searchResidual(encoded: DataFrame, embCol: String, idCol: String,
-                     model: Model, centroids: Seq[Centroid],
-                     cells: Seq[Long], query: Array[Float], k: Int,
-                     rescore: Int, metric: String = "euclidean",
-                     codesCol: String = "pq_codes",
-                     cellCol: String = "cell",
-                     normCol: Option[String] = None): DataFrame = {
-    require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
+  /** Phase 1 of [[searchResidual]]: the `rescore` ids with the smallest
+    * residual ADC value, ordered by (approx, id). The per-cell LUT frame
+    * rides in as a broadcast inner join on the cell (which also prunes
+    * the scan to `cells`); approx = const + Σ_m lut[m][code] summed
+    * ascending m (left-associated from the constant — the order a SQL
+    * oracle's `c + ts[1] + ... + ts[M]` chain replays). A lazy frame that
+    * reads ONLY the codes, the cell (and the stored norm for cosine).
+    * Callers pass the PROBED cells. */
+  def shortListResidual(encoded: DataFrame, idCol: String, model: Model,
+                        centroids: Seq[Centroid], cells: Seq[Long],
+                        query: Array[Float], rescore: Int,
+                        metric: String = "euclidean",
+                        codesCol: String = "pq_codes",
+                        cellCol: String = "cell",
+                        normCol: Option[String] = None): DataFrame = {
+    require(rescore > 0, "need rescore > 0")
     require(cells.nonEmpty, "need at least one cell to probe")
     val spark = encoded.sparkSession
     import spark.implicits._
@@ -355,34 +353,42 @@ object ProductQuantization {
     val phase1Cols = Seq(col(idCol), col(codesCol), col(cellCol)) ++
       (if (metric == "cosine")
         Seq(col(normCol.getOrElse("pq_norm"))) else Nil)
-    val candidates = encoded
+    encoded
       .select(phase1Cols: _*)
       .join(lutDf, col(cellCol) === col("__cell"))
       .withColumn("approx", approx)
       .orderBy(col("approx"), col(idCol))
       .limit(rescore)
       .select(col(idCol))
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
   }
 
-  /** Two-phase ADC search over a table with STORED `pq_codes`: phase 1
-    * scans ONLY the compact columns (numSub lookups + adds per row,
-    * codegen'd; at scale that is numSub bytes-ish per row instead of
-    * dim x 4 — plus one stored double for cosine), phase 2 rescores the
-    * `rescore` survivors exactly under `metric` (rounded like every other
-    * search path). Output: (idCol, distance). */
-  def search(encoded: DataFrame, embCol: String, idCol: String,
-             model: Model, query: Array[Float], k: Int,
-             rescore: Int, metric: String = "euclidean",
-             codesCol: String = "pq_codes",
-             normCol: Option[String] = None): DataFrame = {
+  /** Two-phase residual ADC search over a table with STORED residual
+    * `pq_codes` and a cell column: [[shortListResidual]] (collected),
+    * then the exact rescore under `metric` ([[ExactRescore]]). Callers
+    * pass the PROBED cells (or every cell for an exhaustive fallback). */
+  def searchResidual(encoded: DataFrame, embCol: String, idCol: String,
+                     model: Model, centroids: Seq[Centroid],
+                     cells: Seq[Long], query: Array[Float], k: Int,
+                     rescore: Int, metric: String = "euclidean",
+                     codesCol: String = "pq_codes",
+                     cellCol: String = "cell",
+                     normCol: Option[String] = None): DataFrame = {
     require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
+    ExactRescore.refine(shortListResidual(encoded, idCol, model, centroids,
+        cells, query, rescore, metric, codesCol, cellCol, normCol),
+      encoded, embCol, idCol, query, metric, k)
+  }
+
+  /** Phase 1 of [[search]]: the `rescore` ids with the smallest ADC value,
+    * ordered by (approx, id). A lazy frame that reads ONLY the codes
+    * (plus the stored norm for cosine): numSub lookups + adds per row,
+    * codegen'd — at scale numSub bytes-ish per row instead of dim x 4. */
+  def shortList(encoded: DataFrame, idCol: String, model: Model,
+                query: Array[Float], rescore: Int,
+                metric: String = "euclidean",
+                codesCol: String = "pq_codes",
+                normCol: Option[String] = None): DataFrame = {
+    require(rescore > 0, "need rescore > 0")
     require(SupportedMetrics(metric), s"unsupported PQ metric: $metric")
     val lut = adcLut(model, query, metric)
     // sum over subspaces, ascending m, left-associated — the oracle's
@@ -400,18 +406,26 @@ object ProductQuantization {
     val phase1Cols = Seq(col(idCol), col(codesCol)) ++
       (if (metric == "cosine")
         Seq(col(normCol.getOrElse("pq_norm"))) else Nil)
-    val candidates = encoded
+    encoded
       .select(phase1Cols: _*)
       .withColumn("approx", approx)
       .orderBy(col("approx"), col(idCol))
       .limit(rescore)
       .select(col(idCol))
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+  }
+
+  /** Two-phase ADC search over a table with STORED `pq_codes`:
+    * [[shortList]] (collected), then the exact rescore of the `rescore`
+    * survivors under `metric`, rounded like every other search path
+    * ([[ExactRescore]]). Output: (idCol, distance). */
+  def search(encoded: DataFrame, embCol: String, idCol: String,
+             model: Model, query: Array[Float], k: Int,
+             rescore: Int, metric: String = "euclidean",
+             codesCol: String = "pq_codes",
+             normCol: Option[String] = None): DataFrame = {
+    require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
+    ExactRescore.refine(shortList(encoded, idCol, model, query, rescore,
+        metric, codesCol, normCol),
+      encoded, embCol, idCol, query, metric, k)
   }
 }

@@ -21,16 +21,14 @@ import graft.functions.VectorExpressions
   *      scored over the decoded codes by the fused codegen kernel
   *      Sq8DistanceExpr (codes are metric-independent: the same stored
   *      representation serves euclidean, cosine, and dot_product);
-  *   2. exact rescore of the R survivors with the SAME metric — a
-  *      broadcast semi-join back to the full table touches R rows of
-  *      float32 data, then top-k.
+  *   2. exact rescore of the R survivors with the SAME metric
+  *      ([[ExactRescore]]): the R ids are collected to the driver and an
+  *      id `InSet` filter reads only those rows of float32 data, then
+  *      top-k.
   * At scale phase 1 scans 1/4 the bytes of a flat scan (plus pruned
   * columns), and phase 2's read is O(R), not O(table).
   */
 object Quantization {
-
-  private def litVec(v: Array[Float]): Column =
-    array(v.toIndexedSeq.map(x => lit(x)): _*).cast("array<float>")
 
   /** Add (qmin, qmax, codes) columns quantizing `emb`. A constant vector
     * (max == min) encodes to all-zero codes and decodes to min exactly. */
@@ -47,8 +45,26 @@ object Quantization {
               + lit(0.5)).cast("int"))))
   }
 
+  /** Phase 1 of [[search]]: the `rescore` ids with the smallest
+    * approximate `metric` distance over the codes, ordered by
+    * (approx, id). A lazy frame that reads ONLY the compact columns
+    * (id, codes, qmin, qmax); the full embedding is never read. */
+  def shortList(encoded: DataFrame, idCol: String, query: Array[Float],
+                rescore: Int, metric: String): DataFrame = {
+    require(rescore > 0, "need rescore > 0")
+    encoded
+      .select(col(idCol), col("codes"), col("qmin"), col("qmax"))
+      .withColumn("approx",
+        VectorExpressions.sq8Distance(col("codes"), col("qmin"), col("qmax"),
+          query, metric))
+      .orderBy(col("approx"), col(idCol))
+      .limit(rescore)
+      .select(col(idCol))
+  }
+
   /** Two-phase quantized search: approximate `metric` top-`rescore` on
-    * the codes, exact `metric` top-`k` on the survivors.
+    * the codes (collected: one job while the frame is built), exact
+    * `metric` top-`k` on the survivors.
     * Output: (idCol, distance), distance = round(exact, 6) + 0.0.
     *
     * `metric` has NO default on purpose: both phases score with it, so a
@@ -59,22 +75,7 @@ object Quantization {
              query: Array[Float], k: Int, rescore: Int,
              metric: String): DataFrame = {
     require(k > 0 && rescore >= k, "need k > 0 and rescore >= k")
-    // phase 1 reads ONLY the compact representation
-    val candidates = encoded
-      .select(col(idCol), col("codes"), col("qmin"), col("qmax"))
-      .withColumn("approx",
-        VectorExpressions.sq8Distance(col("codes"), col("qmin"), col("qmax"),
-          query, metric))
-      .orderBy(col("approx"), col(idCol))
-      .limit(rescore)
-      .select(col(idCol))
-    // phase 2: exact distances for the R survivors only
-    encoded.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .withColumn("distance",
-        round(graft.functions.VectorFunctions.distance(metric)(
-          col(embCol), litVec(query)), 6) + lit(0.0d))
-      .select(col(idCol), col("distance"))
-      .orderBy(col("distance"), col(idCol))
-      .limit(k)
+    ExactRescore.refine(shortList(encoded, idCol, query, rescore, metric),
+      encoded, embCol, idCol, query, metric, k)
   }
 }

@@ -11,6 +11,56 @@ class EngineSpec extends AnyFunSuite {
 
   private def vec(xs: Double*): Seq[Float] = xs.map(_.toFloat)
 
+  /** (library id, index kind, storage) of every search funnel: flat and
+    * IVF over each storage, plus LSH. */
+  private val FunnelKinds = Seq(
+    ("flat", VectorEngine.IndexKindFlat, VectorEngine.StorageFloat32),
+    ("lsh", VectorEngine.IndexKindLsh, VectorEngine.StorageFloat32),
+    ("flat-sq8", VectorEngine.IndexKindFlat, VectorEngine.StorageSq8),
+    ("flat-bq", VectorEngine.IndexKindFlat, VectorEngine.StorageBq),
+    ("flat-pq", VectorEngine.IndexKindFlat, VectorEngine.StoragePq),
+    ("ivf-f32", VectorEngine.IndexKindIvf, VectorEngine.StorageFloat32),
+    ("ivf-sq8", VectorEngine.IndexKindIvf, VectorEngine.StorageSq8),
+    ("ivf-bq", VectorEngine.IndexKindIvf, VectorEngine.StorageBq),
+    ("ivf-pq", VectorEngine.IndexKindIvf, VectorEngine.StoragePq))
+  /** Four IVF cells, one per axis. */
+  private val FunnelCells = Seq(0L -> vec(1, 0, 0, 0), 1L -> vec(0, 1, 0, 0),
+    2L -> vec(0, 0, 1, 0), 3L -> vec(0, 0, 0, 1))
+  /** 16 chunks, four per cell; c9 and c10 are exact twins. */
+  private val FunnelChunks = Seq(
+    ("c9", vec(1, 0.1, 0, 0), 1), ("c10", vec(1, 0.1, 0, 0), 2),
+    ("a2", vec(0.9, 0, 0.2, 0), 2), ("a3", vec(0.8, 0.1, 0, 0.1), 2),
+    ("b0", vec(0.1, 1, 0, 0), 1), ("b1", vec(0, 0.9, 0.1, 0), 1),
+    ("b2", vec(0.2, 0.8, 0, 0), 2), ("b3", vec(0, 1, 0, 0.3), 1),
+    ("d0", vec(0, 0.1, 1, 0), 1), ("d1", vec(0.1, 0, 0.9, 0), 2),
+    ("d2", vec(0, 0, 1, 0.2), 1), ("d3", vec(0.3, 0, 0.8, 0), 2),
+    ("f0", vec(0, 0, 0.1, 1), 1), ("f1", vec(0.1, 0, 0, 0.9), 2),
+    ("f2", vec(0, 0.2, 0, 1), 1), ("f3", vec(0.2, 0.2, 0, 0.8), 2))
+  private def books(a: Seq[Float], b: Seq[Float]) =
+    for (m <- 0 until 2; (cid, v) <- Seq(0L -> a, 1L -> b)) yield (m, cid, v)
+  /** Codebooks (2 subspaces x 2 centroids) for raw and residual codes. */
+  private val FunnelRawBooks = books(vec(1, 0), vec(0, 1))
+  private val FunnelResidualBooks = books(vec(0.1, 0), vec(-0.1, 0.1))
+
+  /** Create FunnelKinds' library `name` in `e` (cosine; centroids and
+    * codebooks installed before ingest) holding FunnelChunks under ids
+    * "name/id" and metadata tag. Returns the library id. */
+  private def funnelLibrary(e: VectorEngine, name: String): String = {
+    val (_, kind, storage) = FunnelKinds.find(_._1 == name).get
+    val lib = e.createLibrary(name, dim = 4, indexKind = kind,
+      storage = storage, id = Some(name), lshProjections = 4, lshSeed = 123L).id
+    if (kind == VectorEngine.IndexKindIvf) e.setIvfCentroids(lib, FunnelCells)
+    if (storage == VectorEngine.StoragePq)
+      e.setPqCodebooks(lib,
+        if (kind == VectorEngine.IndexKindIvf) FunnelResidualBooks
+        else FunnelRawBooks)
+    val doc = e.createDocument(lib, "d").id
+    e.addChunksBatch(doc, FunnelChunks.zipWithIndex.map { case ((id, v, tag), i) =>
+      ChunkInput(id, v, Map("tag" -> tag), i, Some(s"$name/$id"))
+    })
+    lib
+  }
+
   private def freshWithData(kind: String = "flat"): (VectorEngine, String, String) = {
     val e = VectorEngine.create(spark)
     val lib = e.createLibrary("lib", dim = 4, indexKind = kind,
@@ -125,6 +175,136 @@ class EngineSpec extends AnyFunSuite {
     assert(filtered == Set("c0", "c2"))
     // no-match filter short-circuits to empty
     assert(e.search(lib, vec(1, 0, 0, 0), k = 10, Map("tag" -> 99)).count() == 0)
+    // ... under every index kind x storage and every LSH probe mode
+    val ek = VectorEngine.create(spark)
+    for ((name, kind, _) <- FunnelKinds) {
+      val probes =
+        if (kind == VectorEngine.IndexKindLsh)
+          Seq(VectorEngine.ProbeAdaptive, VectorEngine.ProbeMulti,
+            VectorEngine.ProbeSingle)
+        else Seq(VectorEngine.ProbeAdaptive)
+      val l = funnelLibrary(ek, name)
+      for (p <- probes) {
+        val none = ek.search(l, vec(1, 0.05, 0.02, 0), k = 10, Map("tag" -> 99),
+          p, nprobeOpt = Some(1))
+        assert(none.count() == 0, s"$name/$p")
+        assert(none.columns.toSeq == Seq("chunk_id", "distance"), s"$name/$p")
+      }
+    }
+  }
+
+  test("ivf search under every storage: the probed cells' two-phase when " +
+    "they hold >= k rows, the full allow-set scan when they hold fewer " +
+    "(also through a filter); bit-identical distances, ties by id") {
+    import org.apache.spark.sql.functions.{col, lit, round}
+    import graft.operators.{BinaryQuantization, IvfIndex, ProductQuantization,
+      Quantization}
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), bits(r.getDouble(1)))).toSeq
+    val e = VectorEngine.create(spark)
+    val cents = FunnelCells.map { case (id, v) => IvfIndex.Centroid(id, v.toArray) }
+    val residualModel = FunnelResidualBooks.groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.map { case (_, cid, v) => IvfIndex.Centroid(cid, v.toArray) })
+    // nearest cell is 0, but b2 (cell 1) beats a2 (cell 0) globally: the
+    // probe and the full scan disagree at k = 4
+    val q = Array(0.6f, 0.5f, 0f, 0f)
+    val qLit = org.apache.spark.sql.functions.array(q.toSeq.map(lit(_)): _*)
+      .cast("array<float>")
+    val r = 4
+    def exact(base: org.apache.spark.sql.DataFrame, k: Int) =
+      base.withColumn("distance", round(graft.functions.VectorFunctions
+          .distance("cosine")(col("embedding"), qLit), 6) + lit(0.0d))
+        .select("id", "distance").orderBy("distance", "id").limit(k)
+    for ((name, kind, storage) <- FunnelKinds
+         if kind == VectorEngine.IndexKindIvf) {
+      val lib = funnelLibrary(e, name)
+      // the operator's own two-phase over `base` at the engine's depth
+      // max(k, r); `cells` = the probe
+      def operator(base: org.apache.spark.sql.DataFrame, k: Int,
+                   cells: Option[Seq[Long]]) = storage match {
+        case VectorEngine.StorageSq8 =>
+          Quantization.search(base, "embedding", "id", q, k, k max r, "cosine")
+        case VectorEngine.StorageBq =>
+          BinaryQuantization.searchStored(base, "embedding", "id", q, k,
+            k max r, "cosine")
+        case VectorEngine.StoragePq if cells.isDefined =>
+          ProductQuantization.searchResidual(base, "embedding", "id",
+            residualModel, cents, cells.get, q, k, k max r, "cosine",
+            codesCol = "codes", cellCol = "bucket", normCol = Some("qmin"))
+        case _ => exact(base, k) // float32, and residual pq's fallback
+      }
+      val probed = IvfIndex.nearestCentroids(q, cents, 1)
+      assert(probed == Seq(0L))
+      def allowSet(filters: Map[String, Any]) = e.chunksDf
+        .where(col("library_id") === lib)
+        .where(graft.functions.MetadataFunctions.filterPredicate(
+          col("metadata"), filters))
+      def search(k: Int, filters: Map[String, Any] = Map.empty) =
+        rows(e.search(lib, q.toSeq, k, filters, nprobeOpt = Some(1),
+          rescoreOpt = Some(r)))
+      // cell 0 holds 4 rows: k = 4 probes, k = 5 falls back
+      val viaProbe = search(4)
+      assert(viaProbe == rows(operator(
+        allowSet(Map.empty).where(col("bucket") === 0L), 4, Some(probed))), name)
+      assert(viaProbe != rows(exact(allowSet(Map.empty), 4)),
+        s"$name: the probe must differ from the full scan here")
+      assert(search(5) == rows(operator(allowSet(Map.empty), 5, None)), name)
+      // tag 1 leaves one row (c9) in cell 0: < k -> allow-set scan
+      val tag1 = Map[String, Any]("tag" -> 1)
+      assert(search(2, tag1) == rows(operator(allowSet(tag1), 2, None)), name)
+      // the exact twins c9/c10 tie; the tie falls to id byte order
+      if (storage == VectorEngine.StorageFloat32) {
+        val ids = viaProbe.map(_._1)
+        assert(ids.indexOf(s"$name/c10") + 1 == ids.indexOf(s"$name/c9"), ids)
+      }
+    }
+  }
+
+  test("single-query search on a reopened engine: flat 1 job, LSH 1, " +
+    "IVF/sq8 2, IVF/f32 2; IVF queries with new probe sets compile no " +
+    "code after a warm-up query") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val e = VectorEngine.create(spark)
+    val libs = Seq("flat", "lsh", "ivf-sq8", "ivf-f32")
+      .map(n => n -> funnelLibrary(e, n)).toMap
+    val dir = Files.tmp("graft-search-jobs")
+    e.save(dir)
+    val e2 = VectorEngine.open(spark, dir)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    def jobsOf(name: String, q: Seq[Float]): Int = {
+      val group = s"search-jobs-$name-${System.nanoTime()}"
+      spark.sparkContext.setJobGroup(group, "EngineSpec")
+      try e2.search(libs(name), q, 3, nprobeOpt = Some(2)).collect()
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.GraftTestListenerBus.drain(spark.sparkContext)
+      jobs.getOrDefault(group, 0)
+    }
+    // probe sets {1,3} (warm-up), then {0,1} {1,2} {2,3} {0,3} {0,2}
+    val warm = vec(0, 1, 0, 0.5)
+    val qs = Seq(vec(1, 0.5, 0, 0), vec(0, 1, 0.5, 0), vec(0, 0, 1, 0.5),
+      vec(0.5, 0, 0, 1), vec(1, 0, 0.5, 0))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val want = Map("flat" -> 1, "lsh" -> 1, "ivf-sq8" -> 2, "ivf-f32" -> 2)
+      for ((name, n) <- want) {
+        jobsOf(name, warm)
+        qs.foreach(q => assert(jobsOf(name, q) == n, s"$name q=$q"))
+      }
+      for (name <- Seq("ivf-sq8", "ivf-f32")) {
+        jobsOf(name, warm)
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        qs.foreach(q => jobsOf(name, q))
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+        assert(compiles == 0, s"$name compiled $compiles classes")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("search parameter guards raise SearchError (services.py:171-175)") {

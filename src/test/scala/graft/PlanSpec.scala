@@ -292,8 +292,32 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("least(")) // the round-2 O(C*dim)-node design
   }
 
-  test("sq8 search on a STORED-codes table: approx phase scans only the " +
-    "compact columns; rescore is a broadcast semi-join touching R rows") {
+  /** Phase 1 of a two-phase search reads only the compact columns: every
+    * scan of its own frame carries `cols` and never the float32
+    * embedding (the whole point of compact storage is scanning fewer
+    * bytes). */
+  private def assertCompactScan(phase1: org.apache.spark.sql.DataFrame,
+                                cols: String*): Unit = {
+    val scans = phase1.queryExecution.executedPlan.toString
+      .linesIterator.filter(_.contains("ReadSchema")).toSeq
+    assert(scans.nonEmpty && scans.forall(l =>
+      cols.forall(l.contains) && !l.contains("embedding")),
+      s"phase 1 reads full vectors:\n${scans.mkString("\n")}")
+  }
+
+  /** The rescore reads the collected short-list through an id INSET
+    * filter and takes the top-k: no join of any kind. */
+  private def assertIdRescore(result: org.apache.spark.sql.DataFrame): Unit = {
+    val p = result.queryExecution.executedPlan.toString
+    assert(p.contains("INSET") && p.contains("TakeOrderedAndProject"), p)
+    for (op <- Seq("BroadcastHashJoin", "LeftSemi", "CartesianProduct",
+        "BroadcastNestedLoopJoin"))
+      assert(!p.contains(op), s"$op in the rescore plan:\n$p")
+  }
+
+  test("sq8 search on a STORED-codes table: phase 1 scans only the " +
+    "compact columns; the rescore reads the R collected ids through an " +
+    "id INSET filter, no join") {
     import org.apache.spark.sql.functions.col
     // materialize the encoded table — the ingest-time shape (the oracle
     // query encodes on the fly, which necessarily reads the embeddings;
@@ -306,24 +330,19 @@ class PlanSpec extends AnyFunSuite {
     val stored = spark.read.parquet(s"$tmp/encoded")
     val q = emb.where(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
+    val phase1 = graft.operators.Quantization.shortList(
+      stored, "vec_id", q, rescore = 50, metric = "euclidean")
+    assert(phase1.queryExecution.executedPlan.toString.contains("sq8_euclidean"))
+    assertCompactScan(phase1, "codes", "qmin", "qmax")
     val result = graft.operators.Quantization.search(
       stored, "embedding", "vec_id", q, k = 10, rescore = 50, metric = "euclidean")
-    val p = result.queryExecution.executedPlan.toString
-    assert(p.contains("sq8_euclidean"))
-    assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
-    // phase 1's scan must NOT carry the float32 embedding column: the
-    // whole point of SQ8 is scanning 1/4 the bytes. The embedding column
-    // appears only in the rescore branch's scan.
-    val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(scans.exists(l => l.contains("codes") && !l.contains("embedding")),
-      s"no compact-only scan — phase 1 reads full vectors:\n${scans.mkString("\n")}")
+    assertIdRescore(result)
     assert(result.count() == 10)
   }
 
   test("bq search on a STORED-words table: the Hamming phase scans only " +
-    "the packed int words (1/32 the float32 bytes); rescore is a " +
-    "broadcast semi-join touching R rows") {
+    "the packed int words (1/32 the float32 bytes); the rescore reads " +
+    "the R collected ids through an id INSET filter, no join") {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-bqplan").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -334,23 +353,18 @@ class PlanSpec extends AnyFunSuite {
     val stored = spark.read.parquet(s"$tmp/encoded")
     val q = emb.where(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
+    assertCompactScan(graft.operators.BinaryQuantization.shortListStored(
+      stored, "vec_id", q, rescore = 50), "codes")
     val result = graft.operators.BinaryQuantization.searchStored(
       stored, "embedding", "vec_id", q, k = 10, rescore = 50,
       metric = "cosine")
-    val p = result.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
-    // phase 1's scan must NOT carry the float32 embedding column — the
-    // embedding appears only in the rescore branch's scan
-    val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(scans.exists(l => l.contains("codes") && !l.contains("embedding")),
-      s"no words-only scan — the Hamming phase reads full vectors:\n${scans.mkString("\n")}")
+    assertIdRescore(result)
     assert(result.count() == 10)
   }
 
   test("pq search on a STORED-codes table: the ADC phase scans only " +
-    "pq_codes (numSub bytes-ish per row, not dim x 4); rescore is a " +
-    "broadcast semi-join") {
+    "pq_codes (numSub bytes-ish per row, not dim x 4); the rescore reads " +
+    "the R collected ids through an id INSET filter, no join") {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-pq").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -361,20 +375,18 @@ class PlanSpec extends AnyFunSuite {
     val stored = spark.read.parquet(s"$tmp/encoded")
     val q = emb.where(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
+    assertCompactScan(graft.operators.ProductQuantization.shortList(
+      stored, "vec_id", model, q, rescore = 50), "pq_codes")
     val result = graft.operators.ProductQuantization.search(
       stored, "embedding", "vec_id", model, q, k = 10, rescore = 50)
-    val p = result.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
-    val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(scans.exists(l => l.contains("pq_codes") && !l.contains("embedding")),
-      s"no codes-only scan — the ADC phase reads full vectors:\n${scans.mkString("\n")}")
+    assertIdRescore(result)
     assert(result.count() == 10)
   }
 
   test("residual IVFPQ search on a STORED-codes table: the ADC phase " +
-    "scans only pq_codes + cell (never the embedding), the per-cell LUT " +
-    "frame is a broadcast hash join, rescore is a broadcast semi-join") {
+    "scans only pq_codes + cell (never the embedding) and joins the " +
+    "per-cell LUT frame by broadcast; the rescore reads the R collected " +
+    "ids through an id INSET filter, no join") {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-plan").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -389,18 +401,16 @@ class PlanSpec extends AnyFunSuite {
     val q = emb.where(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
     val probed = graft.operators.IvfIndex.nearestCentroids(q, cents, 3)
+    val cand = stored.where(col("cell").isin(probed: _*))
+    val phase1 = graft.operators.ProductQuantization.shortListResidual(
+      cand, "vec_id", model, cents, probed, q, rescore = 50)
+    assert(phase1.queryExecution.executedPlan.toString
+      .contains("BroadcastHashJoin"))
+    assertCompactScan(phase1, "pq_codes", "cell")
     val result = graft.operators.ProductQuantization.searchResidual(
-      stored.where(col("cell").isin(probed: _*)),
-      "embedding", "vec_id", model, cents, probed, q, k = 10, rescore = 50)
-    val p = result.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"))
-    val scans = p.linesIterator.filter(_.contains("ReadSchema")).toSeq
-    assert(scans.exists(l => l.contains("pq_codes") && l.contains("cell") &&
-      !l.contains("embedding")),
-      s"no codes+cell-only scan — the ADC phase reads full vectors:\n${scans.mkString("\n")}")
+      cand, "embedding", "vec_id", model, cents, probed, q, k = 10,
+      rescore = 50)
+    assertIdRescore(result)
     assert(result.count() == 10)
   }
 
